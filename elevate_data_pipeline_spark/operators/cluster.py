@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     # symmetrize: row (u, v) = "v is a neighbor of u"
@@ -58,14 +60,18 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _local_components(e: DataFrame) -> DataFrame:
-    """Driver-side union-find over a small (pre-counted) edge list.
+def _local_components(e: DataFrame, rows) -> DataFrame:
+    """Driver-side union-find over a small edge list already collected
+    from ``e`` (the size gate's rows).
 
     Same output contract as the distributed path: (id, component) for
-    non-root nodes, component = min id. One collect instead of
-    O(log² n) shuffle rounds — the fast path when near-dup pair graphs
-    are tiny relative to the corpus (the normal case: pairs ∝ dups).
+    non-root nodes, component = min id. Union-find on the driver instead
+    of O(log² n) shuffle rounds — the fast path when near-dup pair
+    graphs are tiny relative to the corpus (the normal case: pairs ∝
+    dups).
     """
+    from pyspark.sql.types import StructField, StructType
+
     parent: dict = {}
 
     def find(x):
@@ -76,19 +82,17 @@ def _local_components(e: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for u, v in e.collect():
+    for u, v in rows:
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    rows = [(n, find(n)) for n in list(parent)]
-    out = [(n, c) for n, c in rows if n != c]
-    from pyspark.sql.types import StructField, StructType
-
+    labels = [(n, find(n)) for n in list(parent)]
+    out = [(n, c) for n, c in labels if n != c]
     utype = e.schema["u"].dataType
     schema = StructType(
         [StructField("id", utype, False), StructField("component", utype, False)]
     )
-    return e.sparkSession.createDataFrame(out, schema)
+    return local_frame(e.sparkSession, out, schema)
 
 
 def connected_components(
@@ -107,11 +111,14 @@ def connected_components(
     checksum going stable across a round — one tiny two-value action per
     round, no edge-set comparison shuffle.
 
-    Edge lists at or under ``local_threshold`` edges (counted once off
-    the persisted dedup) solve driver-side via union-find — one job
-    instead of O(log² n) rounds; larger graphs run the distributed star
-    contraction. Set ``local_threshold=0`` to force the distributed
-    path.
+    The deduplicated edge list is persisted, then gated by one
+    ``limit(local_threshold + 1).collect()``: at or under
+    ``local_threshold`` edges those rows solve driver-side via
+    union-find and come back as an in-plan ``LocalRelation`` (one job
+    instead of O(log² n) rounds); larger graphs run the distributed star
+    contraction over the persisted edges, so the gate's read is not
+    repeated. The persisted edges are released on both branches. Set
+    ``local_threshold=0`` to force the distributed path.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -120,8 +127,10 @@ def connected_components(
         .persist()
     )
     try:
-        if local_threshold and e.count() <= local_threshold:
-            return _local_components(e)
+        if local_threshold > 0:
+            rows = e.limit(local_threshold + 1).collect()
+            if len(rows) <= local_threshold:
+                return _local_components(e, rows)
         return _distributed_components(e, max_iter)
     finally:
         e.unpersist()
@@ -345,9 +354,7 @@ def _lloyd(
     local = collect_small_corpus(df, vec_col, id_col, _LLOYD_LOCAL_MAX_ROWS)
     if local is not None:
         cent_rows = lloyd_local(local, k, n_iter)
-        cents = df.sparkSession.createDataFrame(
-            cent_rows, "_cl int, _c array<double>"
-        )
+        cents = local_frame(df.sparkSession, cent_rows, "_cl int, _c array<double>")
         return cents, assign
 
     # deterministic cluster ids: rank init centroids by source id

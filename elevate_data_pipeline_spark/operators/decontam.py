@@ -128,7 +128,7 @@ def bloom_decontaminate(
     from ..functions.text import POLY_BASE, POLY_MOD, polyhash
     from . import sketch
     from .sketch import CMS_SALTS
-    from .util import collect_small_columns, spread
+    from .util import collect_small_columns, local_frame, spread
 
     local = collect_small_columns(
         docs, ["doc_id", "text", "source"], _BLOOM_LOCAL_MAX_ROWS
@@ -181,7 +181,8 @@ def bloom_decontaminate(
             n_bloom = sum(1 for g in gs if all(b in bits for b in positions(g)))
             n_exact = sum(1 for g in gs if g in bench_grams)
             rows.append((did, len(gs), n_bloom, n_exact, n_bloom - n_exact))
-        return docs.sparkSession.createDataFrame(
+        return local_frame(
+            docs.sparkSession,
             rows,
             "doc_id long, n_grams bigint, n_bloom bigint, n_exact bigint,"
             " bloom_fp bigint",

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import POLY_BASE, POLY_MOD
-from .util import spread
+from .util import local_frame, spread
 
 # Affine minhash permutations h_j(x) = (A_j * x + B_j) mod MERSENNE61.
 # Fixed constants (seeded PRNG, hardcoded for reproducibility). A, B are
@@ -399,9 +399,7 @@ def sorted_neighborhood_pairs(
                 jac = float(inter) / float(len(ga) + len(gb) - inter)
                 if jac >= threshold:
                     out.append((recs[i][1], recs[j][1], jac))
-        return df.sparkSession.createDataFrame(
-            out, "id_a long, id_b long, jaccard double"
-        )
+        return local_frame(df.sparkSession, out, "id_a long, id_b long, jaccard double")
 
     key = F.expr(
         f"substring(regexp_replace(lower({text_col}), '[^a-z0-9 ]', ''), 1, {key_len})"
@@ -594,7 +592,8 @@ def _signature_frame(
                     StructField("_sig", ArrayType(LongType())),
                 ]
             )
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(i, [int(x) for x in row]) for i, row in zip(ids, sigs)],
                 schema,
             )
@@ -1064,7 +1063,8 @@ def _spans_local(spark, local, k: int, min_docs: int, id_col: str) -> DataFrame:
         dc = min(int(dup_chars[i]), n_chars)
         frac = float(dc) / float(n_chars) if n_chars else float("nan")
         rows.append((did, n_chars, int(n_spans[i]), dc, frac))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         f"{id_col} long, n_chars int, n_dup_spans long, dup_chars long,"
         " dup_frac double",

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 SCALE = 1_000_000_000_000  # fixed-point unit: 1e12 == rank 1.0
 
 
@@ -110,8 +112,8 @@ def pagerank_fixed_point(
         triples = [(r["src"], r["dst"], r["w"]) for r in rows]
         ranks = _pagerank_local(triples, n_iter, redistribute_dangling)
         node_t = dict(e.dtypes)["src"]
-        return edges.sparkSession.createDataFrame(
-            ranks, f"node {node_t}, rank_scaled bigint"
+        return local_frame(
+            edges.sparkSession, ranks, f"node {node_t}, rank_scaled bigint"
         )
 
     e = e.localCheckpoint(eager=False)

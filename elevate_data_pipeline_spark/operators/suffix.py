@@ -145,7 +145,10 @@ def _suffix_array_local(spark, local, depth: int, id_col: str) -> DataFrame:
         nxt[order] = ranks_sorted
         r = nxt
         width *= 2
-    final = np.lexsort((O, D, r))
+    # suffixes equal in their first depth tokens tie: break on
+    # (doc_id, off) like the distributed chain and the oracle
+    doc_ids = np.asarray(ids, dtype=np.int64)[D]
+    final = np.lexsort((O, doc_ids, r))
     rank = np.empty(n, dtype=np.int64)
     rank[final] = np.arange(1, n + 1)
     import pandas as pd
@@ -153,7 +156,7 @@ def _suffix_array_local(spark, local, depth: int, id_col: str) -> DataFrame:
     pdf = pd.DataFrame(
         {
             "rank": rank,
-            id_col: np.asarray(ids, dtype=np.int64)[D] if n else [],
+            id_col: doc_ids,
             "off": O.astype(np.int32),
         }
     )

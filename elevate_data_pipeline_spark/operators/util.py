@@ -38,6 +38,33 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A driver-side result as an in-plan ``LocalRelation``.
+
+    ``rows`` is a list of tuples in ``schema`` field order; ``schema`` is
+    a ``StructType`` or a DDL string. The rows go to the JVM as one
+    pyarrow Table typed by the schema's Arrow mapping, so under
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
+    them in the plan: a ``LocalRelation`` with size stats, whose scan or
+    collect runs no job. ``createDataFrame`` over a Python list instead
+    pickles the rows into a ``ParallelCollectionRDD`` (a ``LogicalRDD``
+    with no stats), and every read of it costs a Spark job (measured in
+    docs/LOCAL_TIERS.md). Every driver-local tier hands its result back
+    through here (sync test in ``tests/test_local_vs_distributed.py``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def collect_small_corpus(
     df: DataFrame, vec_col: str, id_col: str, max_rows: int
 ):

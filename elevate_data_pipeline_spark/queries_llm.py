@@ -3766,7 +3766,13 @@ def dedup_canonical_docs(spark, sf_dir):
     their own canonical, and the rank/size windows run over the members
     frame alone. The earlier shape windowed the entire corpus by
     component — a full-data shuffle at 100 TB for rows that are almost
-    all singleton no-ops."""
+    all singleton no-ops.
+
+    The member map is not pinned: at gate scale the components come back
+    from the driver-local union-find as an in-plan ``LocalRelation``, so
+    the member union is a tiny local plan both joins read without a job;
+    above the gate it is the distributed contraction's result, itself
+    built on per-round checkpoints."""
     from pyspark.sql.window import Window
 
     docs = Catalog(spark, sf_dir).table("documents")
@@ -3777,7 +3783,6 @@ def dedup_canonical_docs(spark, sf_dir):
         cc.select("id", "component")
         .unionByName(cc.select(F.col("component").alias("id"), "component"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     scored = docs.select("doc_id", quality_score("text").alias("quality"))
     clustered = scored.join(members, scored.doc_id == members.id).drop("id")

@@ -161,8 +161,11 @@ def _warm_session(spark: SparkSession, data_dir: str) -> None:
             else:  # no parquet nearby: still warm the exec machinery
                 d = spark.range(3).withColumnRenamed("id", "k")
                 key = "k"
-            # createDataFrame warms the local-relation conversion path
-            lit = spark.createDataFrame([(1,), (2,)], "_w int")
+            # warms the Arrow -> LocalRelation path every driver-local
+            # tier hands its result back through
+            from ..operators.util import local_frame
+
+            lit = local_frame(spark, [(1,), (2,)], "_w int")
             w = Window.partitionBy(key).orderBy(key)
             (
                 d.crossJoin(F.broadcast(lit))

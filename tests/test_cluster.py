@@ -185,3 +185,61 @@ def test_sized_labels_match_window_formulation(spark, edges, extra_nodes,
         .collect()
     }
     assert fast == ref
+
+
+def _persistent_rdds(sc):
+    """Ids of persisted RDDs other than localCheckpoint's (the distributed
+    contraction checkpoints every round by design)."""
+    rdds = sc._jsc.getPersistentRDDs()
+    return {i for i in rdds.keySet() if not rdds.get(i).rdd().isLocallyCheckpointed()}
+
+
+@pytest.mark.parametrize("local_threshold", [1_000_000, 0], ids=["local", "distributed"])
+def test_connected_components_releases_persisted_edges(spark, monkeypatch, local_threshold):
+    """The deduplicated edges are persisted ahead of the size gate; both
+    branches must release them before returning."""
+    e = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src: long, dst: long")
+    persisted = []
+    real_persist = type(e).persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(e), "persist", spy)
+    sc = spark.sparkContext
+    before = _persistent_rdds(sc)
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(e, local_threshold=local_threshold).collect()
+    }
+    assert got == {2: 1, 3: 1, 6: 5}
+    assert persisted, "the edge frame is no longer persisted before the gate"
+    assert _persistent_rdds(sc) <= before
+
+
+@pytest.mark.parametrize("n_edges,branch", [(3, "local"), (4, "distributed")])
+def test_connected_components_gate_boundary(spark, monkeypatch, n_edges, branch):
+    """The gate's limit(threshold + 1) collect sends exactly-threshold
+    edge lists to union-find and one more edge to the star contraction."""
+    from elevate_data_pipeline_spark.operators import cluster
+
+    taken = []
+    real_local = cluster._local_components
+    real_dist = cluster._distributed_components
+    monkeypatch.setattr(
+        cluster, "_local_components",
+        lambda e, rows: taken.append("local") or real_local(e, rows),
+    )
+    monkeypatch.setattr(
+        cluster, "_distributed_components",
+        lambda e, max_iter: taken.append("distributed") or real_dist(e, max_iter),
+    )
+    edges = [(i, i + 1) for i in range(n_edges)]
+    e = spark.createDataFrame(edges, "src: long, dst: long")
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(e, local_threshold=3).collect()
+    }
+    assert taken == [branch]
+    assert got == {i + 1: 0 for i in range(n_edges)}

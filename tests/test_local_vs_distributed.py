@@ -10,10 +10,15 @@ large corpora.
 
 from __future__ import annotations
 
+import contextlib
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
 from elevate_data_pipeline_spark.operators import cluster, graph, similarity
+
+from conftest import SF_DIR
 
 
 def _vectors(spark, n=40, dim=8):
@@ -32,6 +37,30 @@ def _vectors(spark, n=40, dim=8):
 def _rows(df, cols=None):
     cols = cols or df.columns
     return sorted(tuple(r[c] for c in cols) for r in df.select(cols).collect())
+
+
+def _assert_local_relation(df):
+    """A tier's hand-back must optimize to a single in-plan LocalRelation
+    (read without a Spark job) — a leaf, so no pickled-list LogicalRDD
+    hides under it."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+
+
+@contextlib.contextmanager
+def _job_ids(spark):
+    """Collect the ids of the Spark jobs the body submits, via a job
+    group of its own on this thread."""
+    sc = spark.sparkContext
+    group = f"tier-jobs-{uuid.uuid4().hex}"
+    ids: list = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events land
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_quantize_matches_spark_decimal_cast(spark):
@@ -61,6 +90,7 @@ def test_kmeans_local_equals_distributed(spark, monkeypatch):
     df = _vectors(spark)
     local = cluster.kmeans(df, k=4, n_iter=2)
     got_local = _rows(local)
+    _assert_local_relation(cluster.kmeans_centroids(df, k=4, n_iter=2))
     monkeypatch.setattr(cluster, "_LLOYD_LOCAL_MAX_ROWS", -1)
     dist = cluster.kmeans(df, k=4, n_iter=2)
     got_dist = _rows(dist)
@@ -75,6 +105,7 @@ def test_pagerank_local_equals_distributed(spark, monkeypatch):
     )
     for redistribute in (False, True):
         local = graph.pagerank_fixed_point(edges, n_iter=3, redistribute_dangling=redistribute)
+        _assert_local_relation(local)
         got_local = _rows(local)
         monkeypatch.setattr(graph, "_PAGERANK_LOCAL_MAX_EDGES", -1)
         dist = graph.pagerank_fixed_point(edges, n_iter=3, redistribute_dangling=redistribute)
@@ -92,6 +123,7 @@ def test_pagerank_zero_weight_source_matches_distributed(spark, monkeypatch):
         "src bigint, dst bigint, w bigint",
     )
     local = graph.pagerank_fixed_point(edges, n_iter=3)
+    _assert_local_relation(local)
     got_local = _rows(local)
     monkeypatch.setattr(graph, "_PAGERANK_LOCAL_MAX_EDGES", -1)
     dist = graph.pagerank_fixed_point(edges, n_iter=3)
@@ -107,6 +139,7 @@ def test_minhash_signatures_local_equals_distributed(spark, monkeypatch, catalog
 
     docs = catalog.table("documents")
     local = dedup._signature_frame(docs, "text", "doc_id", "arrow")
+    _assert_local_relation(local)
     got_local = _rows(local)
     monkeypatch.setattr(dedup, "_MINHASH_LOCAL_MAX_ROWS", -1)
     dist = dedup._signature_frame(docs, "text", "doc_id", "arrow")
@@ -122,7 +155,9 @@ def test_pretraining_corpus_local_equals_distributed(spark, monkeypatch, catalog
     from elevate_data_pipeline_spark import pipelines
 
     docs = catalog.table("documents")
-    got_local = _rows(pipelines.pretraining_corpus(docs))
+    local = pipelines.pretraining_corpus(docs)
+    _assert_local_relation(local)
+    got_local = _rows(local)
     assert len(got_local) > 0
     monkeypatch.setattr(pipelines, "_PIPELINE_LOCAL_MAX_ROWS", -1)
     assert got_local == _rows(pipelines.pretraining_corpus(docs))
@@ -132,7 +167,9 @@ def test_curate_corpus_local_equals_distributed(spark, monkeypatch, catalog):
     from elevate_data_pipeline_spark import pipelines
 
     docs = catalog.table("documents")
-    got_local = _rows(pipelines.curate_corpus(docs))
+    local = pipelines.curate_corpus(docs)
+    _assert_local_relation(local)
+    got_local = _rows(local)
     assert len(got_local) > 0
     monkeypatch.setattr(pipelines, "_PIPELINE_LOCAL_MAX_ROWS", -1)
     assert got_local == _rows(pipelines.curate_corpus(docs))
@@ -142,7 +179,9 @@ def test_substring_spans_local_equals_distributed(spark, monkeypatch, catalog):
     from elevate_data_pipeline_spark.operators import dedup
 
     docs = catalog.table("documents")
-    got_local = _rows(dedup.substring_dup_spans(docs))
+    local = dedup.substring_dup_spans(docs)
+    _assert_local_relation(local)
+    got_local = _rows(local)
     assert len(got_local) > 0
     monkeypatch.setattr(dedup, "_SPANS_LOCAL_MAX_ROWS", -1)
     assert got_local == _rows(dedup.substring_dup_spans(docs))
@@ -152,7 +191,9 @@ def test_bloom_decontaminate_local_equals_distributed(spark, monkeypatch, catalo
     from elevate_data_pipeline_spark.operators import decontam
 
     docs = catalog.table("documents")
-    got_local = _rows(decontam.bloom_decontaminate(docs))
+    local = decontam.bloom_decontaminate(docs)
+    _assert_local_relation(local)
+    got_local = _rows(local)
     # non-default depth: the local tier must honor depth too (it once
     # iterated all CMS_SALTS regardless, diverging from the distributed
     # tier's CMS_SALTS[:depth] — advisor finding)
@@ -167,7 +208,9 @@ def test_snm_local_equals_distributed(spark, monkeypatch, catalog):
     from elevate_data_pipeline_spark.operators import dedup
 
     docs = catalog.table("documents")
-    got_local = _rows(dedup.sorted_neighborhood_pairs(docs, window=5, n=3, threshold=0.5))
+    local = dedup.sorted_neighborhood_pairs(docs, window=5, n=3, threshold=0.5)
+    _assert_local_relation(local)
+    got_local = _rows(local)
     assert len(got_local) > 0
     monkeypatch.setattr(dedup, "_SNM_LOCAL_MAX_ROWS", -1)
     assert got_local == _rows(
@@ -181,7 +224,9 @@ def test_suffix_array_local_equals_distributed(spark, monkeypatch, catalog):
     from elevate_data_pipeline_spark.operators import suffix
 
     docs = catalog.table("documents")
-    got_local = _rows(suffix.suffix_array(docs))
+    local = suffix.suffix_array(docs)
+    _assert_local_relation(local)
+    got_local = _rows(local)
     assert len(got_local) > 0
     monkeypatch.setattr(suffix, "_SA_LOCAL_MAX_ROWS", -1)
     assert got_local == _rows(suffix.suffix_array(docs))
@@ -190,6 +235,8 @@ def test_suffix_array_local_equals_distributed(spark, monkeypatch, catalog):
 def test_pq_index_local_equals_distributed(spark, monkeypatch):
     df = _vectors(spark, n=48, dim=8)
     cents_l, codes_l = similarity.pq_index(df, m=2, k=3, n_iter=1, dim=8)
+    _assert_local_relation(cents_l)
+    _assert_local_relation(codes_l)
     got_cents_l = _rows(cents_l, ["_s", "_cl", "_c"])
     got_codes_l = _rows(codes_l, ["_id", "_s", "_code"])
     monkeypatch.setattr(similarity, "_PQ_LOCAL_MAX_ROWS", -1)
@@ -198,3 +245,109 @@ def test_pq_index_local_equals_distributed(spark, monkeypatch):
     assert got_cents_l == _rows(cents_d, ["_s", "_cl", "_c"])
     assert got_codes_l == _rows(codes_d, ["_id", "_s", "_code"])
     similarity._PQ_CACHE.clear()
+
+
+def test_suffix_array_local_ties_break_on_doc_id(spark, monkeypatch, tmp_path):
+    """Suffixes equal to ``depth`` tokens rank by (doc_id, off), so the
+    local tier must not depend on the row order of the scan. Rewrite the
+    test data's documents in shuffled order and check the tier against
+    its forced-off distributed chain and the repeated-phrases oracle."""
+    import random
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from elevate_data_pipeline_spark.operators import suffix
+    from elevate_data_pipeline_spark.queries import ORACLES, QUERIES
+    from elevate_data_pipeline_spark.sources.catalog import Catalog
+    from oracle_util import compare
+
+    tbl = pq.read_table(f"{SF_DIR}/documents.parquet")
+    order = list(range(tbl.num_rows))
+    random.Random(7).shuffle(order)
+    path = tmp_path / "documents.parquet"
+    pq.write_table(tbl.take(order), path)
+    docs = Catalog(spark, str(tmp_path)).table("documents")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+
+    local = suffix.suffix_array(docs)
+    _assert_local_relation(local)
+    got_local = _rows(local)
+    compare(
+        QUERIES["dedup_repeated_phrases"](spark, str(tmp_path)),
+        con,
+        ORACLES["dedup_repeated_phrases"],
+    )
+    monkeypatch.setattr(suffix, "_SA_LOCAL_MAX_ROWS", -1)
+    assert got_local == _rows(suffix.suffix_array(docs))
+
+
+def test_tier_queries_collect_without_jobs(spark):
+    """A gated tier's result is a LocalRelation: collecting it runs no
+    Spark job."""
+    from elevate_data_pipeline_spark.queries import QUERIES
+
+    for name in ("decontam_bloom", "curation_pipeline"):
+        df = QUERIES[name](spark, SF_DIR)
+        with _job_ids(spark) as ids:
+            rows = df.collect()
+        assert rows, name
+        assert ids == [], f"{name}: collect ran jobs {ids}"
+
+
+def test_dedup_canonical_docs_build_jobs(spark):
+    """Building dedup_canonical_docs runs only the connected-components
+    size gate and the jobs of its MinHash/LSH pair plan — no eager
+    checkpoint of the cluster members."""
+    from elevate_data_pipeline_spark.queries import QUERIES
+
+    with _job_ids(spark) as ids:
+        df = QUERIES["dedup_canonical_docs"](spark, SF_DIR)
+    assert len(ids) <= 4, f"build ran {len(ids)} jobs: {ids}"
+    assert df.count() > 0
+
+
+# Functions allowed to call createDataFrame in operators/ and pipelines.py:
+# the helper itself, and the suffix-array tier, which hands Spark a pandas
+# frame (converted through Arrow to a LocalRelation as well).
+_CREATE_DATAFRAME_CALLERS = {
+    ("operators/util.py", "local_frame"),
+    ("operators/suffix.py", "_suffix_array_local"),
+}
+
+
+def test_tier_handbacks_go_through_local_frame():
+    """Every driver-local result in operators/ and pipelines.py must be
+    built by util.local_frame: createDataFrame over a Python list gives a
+    LogicalRDD that costs a Spark job on every read. Fails on a new
+    createDataFrame call outside the listed functions, and on a listed
+    function that no longer calls it."""
+    import ast
+    import pathlib
+
+    import elevate_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = set()
+    for path in sorted((root / "operators").glob("*.py")) + [root / "pipelines.py"]:
+        rel = path.relative_to(root).as_posix()
+
+        def visit(node, func):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                func = node.name
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                found.add((rel, func))
+            for child in ast.iter_child_nodes(node):
+                visit(child, func)
+
+        visit(ast.parse(path.read_text()), None)
+    assert found == _CREATE_DATAFRAME_CALLERS, (
+        f"createDataFrame outside local_frame: "
+        f"{sorted(found - _CREATE_DATAFRAME_CALLERS)}; "
+        f"stale: {sorted(_CREATE_DATAFRAME_CALLERS - found)}"
+    )
