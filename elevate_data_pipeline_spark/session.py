@@ -3,7 +3,16 @@
 Local testing runs ``local[N]``; the same conf scales to a multi-executor
 cluster — AQE handles runtime re-planning (partition coalescing, skew-join
 splitting), broadcast threshold covers dimension tables, and shuffle
-partitions are set explicitly instead of the 200 default.
+partitions default to one task wave (the session's
+``defaultParallelism``) instead of Spark's 200.
+
+Why one wave: AQE coalesces a batch shuffle's partitions at runtime, so
+for batch plans the setting is only an upper bound. A stateful stream
+gets no AQE: it runs exactly ``spark.sql.shuffle.partitions`` state-store
+tasks in every micro-batch, each committing its store however little data
+it holds, and the count is frozen into the stream's checkpoint at first
+start (a restart resumes at the checkpoint's count whatever the session
+says). One wave keeps every core busy with no idle state stores.
 
 The reference pinned ``local[2]`` (task/mentoringExecution2.scala:23); we
 instead take core count from the environment so the driver's
@@ -18,9 +27,10 @@ from pyspark.sql import SparkSession
 
 # At 100 TB these move to cluster-level conf; the *ratios* are what matter:
 # shuffle partitions sized so a partition fits comfortably in executor memory
-# (~128-256 MB of shuffle data each), AQE coalescing the excess at runtime.
+# (~128-256 MB of shuffle data each, see size_shuffle), AQE coalescing the
+# excess at runtime. spark.sql.shuffle.partitions is not here: get_spark sets
+# it to one wave, the session's defaultParallelism (module docstring).
 _DEFAULTS = {
-    "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -44,7 +54,9 @@ def get_spark(app_name: str = "elevate_data_pipeline_spark", **overrides: str) -
     """Build (or fetch) the tuned SparkSession.
 
     Core count comes from ``SPARK_GRAFT_CPUS`` (default ``*``). Any conf
-    key can be overridden via ``overrides``.
+    key can be overridden via ``overrides``; without an override,
+    ``spark.sql.shuffle.partitions`` is the session's
+    ``defaultParallelism``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
@@ -54,6 +66,10 @@ def get_spark(app_name: str = "elevate_data_pipeline_spark", **overrides: str) -
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if "spark.sql.shuffle.partitions" not in overrides:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
     return spark
 
 

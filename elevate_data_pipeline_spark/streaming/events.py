@@ -21,6 +21,12 @@ cardinality, so state stays small; sessionization shuffles on user_id,
 which at 100 TB is the natural partitioning for per-user state (state
 store scales with #live users, not #events). RocksDB state store is the
 cluster-side conf for that; local tests use the default HDFS-backed one.
+Every stateful micro-batch runs one state-store task per shuffle
+partition (streams get no AQE coalescing), each committing its store
+however little data it holds: the session default of one wave
+(``session.get_spark``) keeps that to one task per core. The count is
+frozen into the checkpoint when a stream first starts; a restart resumes
+at the checkpoint's count whatever the session's setting.
 """
 
 from __future__ import annotations
@@ -77,9 +83,11 @@ def read_events_stream(
     batch size (and lets tests force multi-batch execution).
 
     The ``ts`` layout (nanos-as-long vs native timestamp) is probed from
-    the files already present via a one-off batch read — a driver-side
-    footer read, no data scan — so the stream sees the same ``ts`` type
-    and values the batch ``Catalog`` produces for the same files.
+    the files already present via a one-off batch read, so the stream
+    sees the same ``ts`` type and values the batch ``Catalog`` produces
+    for the same files. The probe reads parquet footers only, but it
+    does so in a one-task Spark job (schema inference), not on the
+    driver.
     """
     # same defensive confs as Catalog.load_table: work on a vanilla session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

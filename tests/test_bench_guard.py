@@ -4,12 +4,13 @@ pin, a broadcast that stopped firing, a pushdown that broke) should fail
 at commit time, not at the next judge round.
 
 The guard re-times the N slowest committed queries at the same scale
-factor bench.py recorded, under the BENCH's session shape (shuffle
-partitions overridden to session._DEFAULTS — the conftest suite session
-runs 8 for suite speed, but the committed medians were produced at the
-bench's 32), after a small-SF warm pass AND one untimed at-scale prime
-per query (the medians are steady-state: per-input priming + median of
-3). A single timed run is noisy, so the trip threshold is 3x the
+factor bench.py recorded, under the session shape the medians were
+recorded at (shuffle partitions overridden to MEDIANS_SHUFFLE_PARTITIONS,
+32: docs/bench_medians.json was recorded on a 32-core box, where the
+session default of one wave is 32 partitions; the conftest suite
+session runs 8 for suite speed), after a small-SF warm pass AND one
+untimed at-scale prime per query (the medians are steady-state:
+per-input priming + median of 3). A single timed run is noisy, so the trip threshold is 3x the
 committed median AND >= 1 s absolute slack — wide enough that the
 observed full-bench interference (~1.5x swings on sub-2 s queries)
 never false-fires, tight enough that a genuine plan regression (the
@@ -47,6 +48,8 @@ N_SLOWEST = 10
 FACTOR = 3.0
 ABS_SLACK = 1.0  # seconds
 RATIO_CLAMP = (0.6, 4.0)
+# shuffle partitions (= cores, one wave) of the box the medians were recorded on
+MEDIANS_SHUFFLE_PARTITIONS = 32
 
 
 def _bench_record():
@@ -78,7 +81,6 @@ def test_slowest_queries_within_committed_medians(spark):
     import time
 
     from elevate_data_pipeline_spark.queries import QUERIES
-    from elevate_data_pipeline_spark.session import _DEFAULTS
 
     rec, sf_dir = _bench_record()
     slowest = sorted(rec["queries"].items(), key=lambda kv: -kv[1])[:N_SLOWEST]
@@ -95,9 +97,10 @@ def test_slowest_queries_within_committed_medians(spark):
         QUERIES[name](spark, sf_dir).collect()
         return time.perf_counter() - t0
 
-    # Measure under the BENCH's session shape, not the test suite's: the
-    # conftest session runs shuffle.partitions=8 for suite speed, but the
-    # committed medians were produced by bench.py at session._DEFAULTS
+    # Measure under the session shape the medians were recorded at, not
+    # the test suite's: the conftest session runs shuffle.partitions=8 for
+    # suite speed, but the committed medians were produced by bench.py on
+    # a 32-core box, whose one-wave default is MEDIANS_SHUFFLE_PARTITIONS
     # (32) — the r12 round-start run of this guard clocked
     # dedup_ngram_jaccard at 99 s under 8 partitions vs 13 s at the
     # bench's 32 on the same quiet box (the self-join/window stages run
@@ -107,13 +110,11 @@ def test_slowest_queries_within_committed_medians(spark):
     # solo-probe protocol) — otherwise the single timed shot also pays
     # first-touch costs the medians never contain.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _DEFAULTS["spark.sql.shuffle.partitions"]
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(MEDIANS_SHUFFLE_PARTITIONS))
     try:
         # Calibrate INSIDE the bench session shape (ADVICE r12): the
-        # committed probe_sec was recorded by bench.py at _DEFAULTS
-        # shuffle partitions, so running the probe under the conftest
+        # committed probe_sec was recorded by bench.py at
+        # MEDIANS_SHUFFLE_PARTITIONS, so running the probe under the conftest
         # session's 8 would scale the limits with a probe measured
         # under a different session shape than the timings it scales.
         ratio = _box_ratio(spark, rec)

@@ -1,5 +1,6 @@
 """Spill-aware conf sizing (session.size_shuffle): the arithmetic that
-keeps reduce partitions in the 128-256 MB band at any scale."""
+keeps reduce partitions in the 128-256 MB band at any scale, and the
+session's one-wave default it floors to."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ from elevate_data_pipeline_spark.session import (
     MAX_SCAN_SPLIT_BYTES,
     MIN_SCAN_SPLIT_BYTES,
     TARGET_SHUFFLE_PARTITION_BYTES,
+    get_spark,
     size_shuffle,
 )
 
@@ -51,3 +53,18 @@ def test_rejects_bad_inputs():
         size_shuffle(0)
     with pytest.raises(ValueError):
         size_shuffle(TB, shuffle_fraction=0.0)
+
+
+def test_get_spark_defaults_shuffle_partitions_to_one_wave(spark):
+    """Without an override get_spark sets shuffle partitions to the
+    session's core count (one wave); an explicit override wins."""
+    dp = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(dp + 1))
+        assert get_spark("edp-tests") is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(dp)
+        get_spark("edp-tests", **{"spark.sql.shuffle.partitions": str(dp + 3)})
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(dp + 3)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

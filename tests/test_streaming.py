@@ -4,13 +4,17 @@ across micro-batches."""
 
 from __future__ import annotations
 
+import datetime as dt
+import json
 import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from elevate_data_pipeline_spark.session import get_spark
 from elevate_data_pipeline_spark.sources.catalog import Catalog
 from elevate_data_pipeline_spark.streaming import (
     hourly_rollup,
@@ -578,3 +582,69 @@ def test_rate_source_dedup_and_sessionize_twins(spark):
     assert got_d == want_d
     got_s = run_until(sessionize_native, want_s, "complete")
     assert got_s == want_s
+
+
+def _rollup_to_parquet(stream, sink: str, ckpt: str):
+    q = (
+        hourly_rollup(stream).writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    return q
+
+
+def test_state_stores_follow_session_parallelism(spark, events_dir, tmp_path):
+    """A stateful stream started under get_spark's default runs one
+    state-store partition per core (one wave), not a fixed count."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        get_spark("edp-tests")
+        q = _rollup_to_parquet(
+            read_events_stream(spark, events_dir),
+            str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+        )
+        ops = json.loads(q.lastProgress.json)["stateOperators"]
+        assert ops[0]["numShufflePartitions"] == spark.sparkContext.defaultParallelism
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
+    """A checkpoint created at 32 state partitions resumes at 32 under the
+    one-wave default (Spark keeps the count in the offset log), and the
+    sink holds exactly the batch rollup's windows closed by the final
+    watermark."""
+    events = pq.read_table(os.path.join(SF_DIR, "events.parquet")).sort_by("ts")
+    src, sink, ckpt = tmp_path / "src", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    src.mkdir()
+    cuts = [events.num_rows * i // 4 for i in range(5)]
+
+    def feed(parts):
+        for i in parts:
+            part = events.slice(cuts[i], cuts[i + 1] - cuts[i])
+            pq.write_table(part, str(src / f"part-{i}.parquet"))
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        feed((0, 1))
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        _rollup_to_parquet(read_events_stream(spark, str(src)), sink, ckpt)
+
+        feed((2, 3))
+        get_spark("edp-tests")
+        q = _rollup_to_parquet(read_events_stream(spark, str(src)), sink, ckpt)
+        last = json.loads(q.lastProgress.json)
+        assert last["stateOperators"][0]["numShufflePartitions"] == 32
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    wm = dt.datetime.strptime(last["eventTime"]["watermark"], "%Y-%m-%dT%H:%M:%S.%fZ")
+    batch = hourly_rollup(Catalog(spark, SF_DIR).table("events")).collect()
+    want = sorted(tuple(r) for r in batch if r.hour_ts + dt.timedelta(hours=1) <= wm)
+    got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
+    assert got == want and len(want) > 0
